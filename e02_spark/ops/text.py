@@ -16,6 +16,11 @@ from pyspark.sql import functions as F
 
 STOPWORDS = ["a", "the"]
 
+# Most gram rows the Arrow gram kernel buffers before it emits a
+# RecordBatch: its Python-side memory stays bounded however long the
+# documents or large the input batches are.
+GRAM_BATCH_ROWS = 65536
+
 
 def tokens(documents: DataFrame) -> DataFrame:
     """(doc_id, token) — one row per token occurrence (order-preserving)."""
@@ -55,7 +60,9 @@ def _grams_arrow(
     The per-gram work is a Python loop, but it replaces a JVM sort
     shuffle, not codegen arithmetic: ' '.join over list slices runs at
     C speed and the whole crossing ships exactly (doc_id, *keep_cols,
-    text) in and compact gram rows out (guide §4.2)."""
+    text) in and compact gram rows out (guide §4.2). Output goes out in
+    RecordBatches of at most GRAM_BATCH_ROWS grams, so the gram buffer
+    is bounded independently of document length and input batch size."""
     import pyarrow as pa
 
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -71,6 +78,17 @@ def _grams_arrow(
     )
     a_schema = to_arrow_schema(out_schema)
     nn, n_keys, dd = n, 1 + len(keep_cols), distinct_per_doc
+    chunk = GRAM_BATCH_ROWS  # bound at build time, shipped in the closure
+
+    def _flush(out_keys, grams):
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(out_keys[i], type=a_schema.field(i).type)
+                for i in range(n_keys)
+            ]
+            + [pa.array(grams, type=pa.string())],
+            schema=a_schema,
+        )
 
     def _gen(batches):
         for batch in batches:
@@ -90,17 +108,20 @@ def _grams_arrow(
                     # first-occurrence order: deterministic output (a
                     # set's iteration order varies per process hash seed)
                     gs = list(dict.fromkeys(gs))
-                grams.extend(gs)
-                for ki in range(n_keys):
-                    out_keys[ki].extend([keys[ki][ri]] * len(gs))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_keys[i], type=a_schema.field(i).type)
-                    for i in range(n_keys)
-                ]
-                + [pa.array(grams, type=pa.string())],
-                schema=a_schema,
-            )
+                # a long document may span several output batches
+                lo = 0
+                while lo < len(gs):
+                    take = gs[lo : lo + chunk - len(grams)]
+                    lo += len(take)
+                    grams.extend(take)
+                    for ki in range(n_keys):
+                        out_keys[ki].extend([keys[ki][ri]] * len(take))
+                    if len(grams) >= chunk:
+                        yield _flush(out_keys, grams)
+                        out_keys = [[] for _ in range(n_keys)]
+                        grams = []
+            if grams:
+                yield _flush(out_keys, grams)
 
     return src.mapInArrow(_gen, out_schema)
 

@@ -1,10 +1,14 @@
-"""Ad-hoc: run one declared entry with a job-census listener.
+"""Ad-hoc: run declared entries with a job-census listener.
 
-Usage: E02_PROF=1 python scripts/profile_entry.py q116_lakehouse_merge [runs]
+Usage: E02_PROF=1 python scripts/profile_entry.py q116_lakehouse_merge [more entries] [runs]
 
-Prints per-run wall plus a Spark job census (job id, duration, stage/task
-counts, description) so fixed per-job machinery can be attributed to
-operator phases. Measurement-only tooling; never imported by the engine.
+Runs `runs` passes over the named entries in order (a pass builds and
+counts each entry once, then resets shared state, as bench.py does).
+Prints per-run wall, Janino compiles and summed compile ms, plus a Spark
+job census (job id, duration, stage/task counts, description) so fixed
+per-job machinery can be attributed to operator phases; each pass ends
+with its compile total. Measurement-only tooling; never imported by the
+engine.
 """
 
 from __future__ import annotations
@@ -18,7 +22,7 @@ here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, here)
 
 from e02_spark.queries import all_queries, reset_shared_state
-from e02_spark.session import get_spark
+from e02_spark.session import codegen_compiles, get_spark
 
 
 def main() -> int:
@@ -39,17 +43,21 @@ def main() -> int:
     # (no listener registration needed from Python).
     store = sc._jsc.sc().statusStore()
 
-    for name in names:
-        for r in range(runs):
+    for r in range(runs):
+        pc0, pms0 = codegen_compiles(spark)
+        for name in names:
             jobs_before = {j.jobId() for j in _jobs(store, gw)}
+            c0, ms0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
             n = df.count()
             wall = time.perf_counter() - t0
             time.sleep(0.5)
+            c1, ms1 = codegen_compiles(spark)
             jobs = [j for j in _jobs(store, gw) if j.jobId() not in jobs_before]
             print(f"\n=== {name} run {r}: wall={wall:.3f}s rows={n} "
-                  f"jobs={len(jobs)} ===")
+                  f"jobs={len(jobs)} compiles={c1 - c0} "
+                  f"compile_ms={ms1 - ms0:.0f} ===")
             total_ms = 0
             for j in sorted(jobs, key=lambda x: x.jobId()):
                 sub = j.submissionTime()
@@ -66,6 +74,9 @@ def main() -> int:
             print(f"  --- sum job durations: {total_ms:.3f}s (wall {wall:.3f}s)")
             reset_shared_state(spark)
             gc.collect()
+        pc1, pms1 = codegen_compiles(spark)
+        print(f"\n### pass {r}: {len(names)} entries, compiles={pc1 - pc0} "
+              f"compile_ms={pms1 - pms0:.0f}")
     return 0
 
 

@@ -171,3 +171,21 @@ def test_shingles_per_doc_dedup_and_gating(spark):
     # empty tokens are real tokens: " lead" -> ("", "lead") -> 1 bigram
     assert {g for g in got if g[0] == 6} == {(6, " lead")}
     assert {g for g in got if g[0] == 9} == {(9, " ")}
+
+
+@pytest.mark.parametrize("chunk", [1, 2, 3])
+def test_gram_kernel_multi_chunk_matches_jvm(spark, monkeypatch, chunk):
+    """With GRAM_BATCH_ROWS below the gram count of most adversarial docs,
+    the kernel flushes mid-document and across documents; the rows must
+    still equal the JVM reference forms'."""
+    from e02_spark.ops import text
+
+    monkeypatch.setattr(text, "GRAM_BATCH_ROWS", chunk)
+    d, dk = _adv_df(spark), _adv_df(spark, with_keep=True)
+    for n in (2, 3):
+        assert _rows(shingles(d, n=n)) == _rows(shingles_jvm(d, n=n))
+        assert _rows(ngram_occurrences(d, n)) == _rows(ngram_occurrences_jvm(d, n))
+    keep = ("source", "grp")
+    assert _rows(ngram_occurrences(dk, 2, keep_cols=keep)) == _rows(
+        ngram_occurrences_jvm(dk, 2, keep_cols=keep)
+    )
